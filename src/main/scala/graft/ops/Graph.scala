@@ -105,7 +105,12 @@ object Graph {
       else CacheRegistry.persist(
         e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
           .distinct())
-    var rank = nodes.withColumn("rank", lit(Scale))
+    // the start rank and its flag are set together: round 1's fast path
+    // below is valid only for this uniform start, so a warm start (any
+    // other initial rank) must clear the flag
+    val startRank = nodes.withColumn("rank", lit(Scale))
+    val uniformStart = true
+    var rank = startRank
     // in tol mode each round's result is already persisted+materialized
     // by the delta action — reuse it as next round's prev instead of
     // re-registering the same frame
@@ -129,11 +134,13 @@ object Graph {
       // any scale this deletes one full co-partitioned join pass over the
       // edge set. Rounds 2+ keep the node-keyed join (ranks are no longer
       // constant).
-      val contrib = (if (rounds == 1)
+      val contrib = (if (rounds == 1 && uniformStart) {
+        require(prev eq startRank,
+          "pagerank round-1 fast path reached with a rank other than the uniform lit(Scale) start")
         edeg.select(col("dst").as("node"),
           call_function("div", lit(Scale * dampingPermille),
             lit(1000L) * col("outdeg")).as("c"))
-      else edeg
+      } else edeg
         .join(prev.withColumnRenamed("node", "src"), "src")
         .select(col("dst").as("node"),
           call_function("div", col("rank") * lit(dampingPermille),

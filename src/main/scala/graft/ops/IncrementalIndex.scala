@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Tables
 
 /** Incremental maintenance for the materialize-once artifacts — the
   * r10 artifacts (kNN edge set, inverted index) were build-once,
@@ -83,7 +84,7 @@ object IncrementalIndex {
 
     /** Read back the frozen centroids (config-scale, ≤ 1024 × 64 longs). */
     private def centroids(s: SparkSession, root: String): Array[(Long, Array[Long])] =
-      s.read.parquet(s"$root/centroids").collect()
+      Tables.parquet(s, s"$root/centroids").collect()
         .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
         .sortBy(_._1)
 
@@ -110,8 +111,7 @@ object IncrementalIndex {
           .map(v => new Path(sp, s"cell=$v")).filter(hasData(fs, _))
           .map(_.toString)
         def readCells(cells: Seq[Long]): DataFrame =
-          s.read.option("basePath", s"$root/assign")
-            .parquet(cellDirs(cells): _*)
+          Tables.parquet(s, cellDirs(cells), Map("basePath" -> s"$root/assign"))
             .withColumn("cell", col("cell").cast("long"))
         // 2. touched queries: every vector PROBING a touched cell (its
         //    candidate set changed) — O(touched-cell rows), partition-
@@ -155,7 +155,7 @@ object IncrementalIndex {
         val oldKept =
           if (edirs.isEmpty)
             newE.limit(0)
-          else s.read.option("basePath", s"$root/edges").parquet(edirs: _*)
+          else Tables.parquet(s, edirs, Map("basePath" -> s"$root/edges"))
             .withColumn("pcell", col("pcell").cast("long"))
             .join(broadcast(qProbe.select(col("id").as("query_id")).distinct()),
               Seq("query_id"), "left_anti")
@@ -173,7 +173,7 @@ object IncrementalIndex {
 
     /** The consumer-facing kNN graph off the store. */
     def edges(s: SparkSession, root: String): DataFrame =
-      s.read.parquet(s"$root/edges")
+      Tables.parquet(s, s"$root/edges")
         .select("query_id", "rnk", "cand_id", "cos")
   }
 
@@ -220,14 +220,14 @@ object IncrementalIndex {
     val Iters2 = 2
 
     private def coarseOf(s: SparkSession, root: String): Array[(Long, Array[Long])] =
-      s.read.parquet(s"$root/coarse").collect()
+      Tables.parquet(s, s"$root/coarse").collect()
         .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
         .sortBy(_._1)
 
     private def fineMapOf(s: SparkSession, root: String)
         : Map[Long, (Array[Long], Array[Array[Long]], Array[Double])] =
       Similarity.hierFineMap(
-        s.read.parquet(s"$root/fine").select("cell", "fcid", "q").collect())
+        Tables.parquet(s, s"$root/fine").select("cell", "fcid", "q").collect())
 
     /** The store's pfcell rule: the member fine cell when the query has
       * one (always, at build — a vector's rank-1 coarse cell contains
@@ -301,8 +301,7 @@ object IncrementalIndex {
           .map(v => new Path(sp, s"fcell=$v")).filter(hasData(fs, _))
           .map(_.toString)
         def readCells(cells: Seq[Long]): DataFrame =
-          s.read.option("basePath", s"$root/assign")
-            .parquet(cellDirs(cells): _*)
+          Tables.parquet(s, cellDirs(cells), Map("basePath" -> s"$root/assign"))
             .withColumn("fcell", col("fcell").cast("long"))
         // touched queries: every vector PROBING a touched fine cell —
         // partition-pruned store read, O(touched fine-cell rows)
@@ -337,7 +336,7 @@ object IncrementalIndex {
         val oldKept =
           if (edirs.isEmpty)
             newE.limit(0)
-          else s.read.option("basePath", s"$root/edges").parquet(edirs: _*)
+          else Tables.parquet(s, edirs, Map("basePath" -> s"$root/edges"))
             .withColumn("pfcell", col("pfcell").cast("long"))
             .join(broadcast(qTag.select(col("id").as("query_id")).distinct()),
               Seq("query_id"), "left_anti")
@@ -355,7 +354,7 @@ object IncrementalIndex {
 
     /** The consumer-facing kNN graph off the store. */
     def edges(s: SparkSession, root: String): DataFrame =
-      s.read.parquet(s"$root/edges")
+      Tables.parquet(s, s"$root/edges")
         .select("query_id", "rnk", "cand_id", "cos")
   }
 
@@ -402,7 +401,7 @@ object IncrementalIndex {
         .coalesce(1).write.mode(SaveMode.Append).parquet(s"$root/meta")
 
     private def nDocs(s: SparkSession, root: String): Long =
-      s.read.parquet(s"$root/meta").agg(sum(col("n_docs"))).head().getLong(0)
+      Tables.parquet(s, s"$root/meta").agg(sum(col("n_docs"))).head().getLong(0)
 
     def build(docs: DataFrame, idCol: String, textCol: String,
               isQuery: org.apache.spark.sql.Column, root: String,
@@ -479,13 +478,13 @@ object IncrementalIndex {
     def postings(s: SparkSession, root: String,
                  stopTermFrac: Double = 0.02): DataFrame = {
       val cap = math.max(5.0, stopTermFrac * nDocs(s, root))
-      s.read.parquet(s"$root/tf")
-        .join(s.read.parquet(s"$root/df")
+      Tables.parquet(s, s"$root/tf")
+        .join(Tables.parquet(s, s"$root/df")
           .filter(col("df") <= lit(cap)).select("token", "df"), "token")
         .select("id", "isq", "token", "tf", "df")
     }
 
     def doclen(s: SparkSession, root: String): DataFrame =
-      s.read.parquet(s"$root/doclen").select("id", "len")
+      Tables.parquet(s, s"$root/doclen").select("id", "len")
   }
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.TimeFns
+import graft.sources.Tables
 
 /** The engine's core aggregation (SURVEY §2.4 A1-A3): the ClickHouse
   * SummingMergeTree hourly rollup, computed by the engine instead of
@@ -237,12 +238,12 @@ object Rollup {
       .withColumn("pkey", pkeyDay(col("hour")))
       .repartition(col("pkey"), hourSalt)
       .write.mode("overwrite").partitionBy("pkey").parquet(ladder.hourlyPath)
-    reaggregateStats(spark.read.parquet(ladder.hourlyPath), "hour", "day",
+    reaggregateStats(Tables.parquet(spark, ladder.hourlyPath), "hour", "day",
         ladder.dims, "bucket", k, ladder.extraMeasures, q)
       .withColumn("pkey", pkeyMonth(col("bucket")))
       .repartition(col("pkey"))
       .write.mode("overwrite").partitionBy("pkey").parquet(ladder.dailyPath)
-    reaggregateStats(spark.read.parquet(ladder.dailyPath), "bucket", "month",
+    reaggregateStats(Tables.parquet(spark, ladder.dailyPath), "bucket", "month",
         ladder.dims, "bucket", k, ladder.extraMeasures, q)
       .withColumn("pkey", year(col("bucket")))
       .repartition(col("pkey"))
@@ -476,12 +477,11 @@ object Rollup {
                 fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet")))
               .map(_.toString)
             if (existing.isEmpty) d.limit(0)
-            else spark.read.option("basePath", path)
-              .parquet(existing: _*)
+            else Tables.parquet(spark, existing, Map("basePath" -> path))
               .withColumn(partCol, col(s"`$partCol`")
                 .cast(d.schema(partCol).dataType))
               .filter(touchedPred)
-          case None => spark.read.parquet(path).filter(touchedPred)
+          case None => Tables.parquet(spark, path).filter(touchedPred)
         }
         else d.limit(0)
       // cluster by the partition value before materializing: a dynamic-
@@ -533,7 +533,7 @@ object Rollup {
       n
     }
     val before = dataFiles()
-    val df = spark.read.parquet(path)
+    val df = Tables.parquet(spark, path)
     val dataCols = df.columns.filter(_ != partCol).toIndexedSeq
     val clustered =
       if (filesPerPartition == 1) df.repartition(col(partCol))

@@ -12,6 +12,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.{DecimalType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+import graft.sources.Tables
 
 /** AGGREGATE NAVIGATION — the engine-native analog of the reference's
   * "query the rollup, not raw" architecture (its warehouse delegates
@@ -368,7 +369,7 @@ object RollupNavigation extends Rule[LogicalPlan] {
         ems.forall(_._2.nonEmpty),
       "RollupNavigation: raw frame must be Project/Alias (no Filter) over one file relation")
     val roots = ts.get._1
-    val rollupRel = spark.read.parquet(rollupPath).queryExecution.analyzed.collectFirst {
+    val rollupRel = Tables.parquet(spark, rollupPath).queryExecution.analyzed.collectFirst {
       case lr: LogicalRelation => lr
     }.getOrElse(throw new IllegalStateException(
       s"RollupNavigation: $rollupPath did not analyze to a file relation"))

@@ -876,7 +876,7 @@ object AnalyticsQueries {
     // events with a window — state == latest-per-key is the upsert
     // contract, and (ts, event_id) ordering makes it tie-free.
     "q_t23_streaming_upsert" -> ((s, dir) => {
-      s.read.parquet(streamedUpsertState(s, dir))
+      Tables.parquet(s, streamedUpsertState(s, dir))
         .select(col("user_id"), col("ts_us").as("last_ts_us"),
           col("event_type").as("last_type"), col("cents").as("last_cents"))
     }),
@@ -1136,7 +1136,7 @@ object AnalyticsQueries {
         org.apache.spark.sql.streaming.OutputMode.Append)
       sink
     })
-    s.read.parquet(out).filter(col("u") >= 0L)
+    Tables.parquet(s, out).filter(col("u") >= 0L)
   }
 
   /** Landing for q_t20_streaming_wau: events as a JSON topic, per-(day,
@@ -1167,7 +1167,7 @@ object AnalyticsQueries {
         org.apache.spark.sql.streaming.OutputMode.Update)
       sink
     })
-    s.read.parquet(out).groupBy("day", "reg_idx")
+    Tables.parquet(s, out).groupBy("day", "reg_idx")
       .agg(max(col("rho")).as("rho"))
   }
 
@@ -1213,7 +1213,7 @@ object AnalyticsQueries {
     })
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("day").orderBy(col("total").desc)
-    s.read.parquet(out)
+    Tables.parquet(s, out)
       .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
       .select("day", "cands", "total")
   }
@@ -1295,7 +1295,7 @@ object AnalyticsQueries {
         org.apache.spark.sql.streaming.OutputMode.Append)
       sink
     })
-    s.read.parquet(out).filter(col("user_id") >= 0)
+    Tables.parquet(s, out).filter(col("user_id") >= 0)
   }
 
   /** Landing for q_t26_streaming_beacon: the events topic as FOUR
@@ -1353,7 +1353,7 @@ object AnalyticsQueries {
         org.apache.spark.sql.streaming.OutputMode.Update)
       sink
     })
-    s.read.parquet(out).filter(col("user_id") >= 0).groupBy("user_id")
+    Tables.parquet(s, out).filter(col("user_id") >= 0).groupBy("user_id")
       .agg(max(col("n_gaps")).as("n"), max(col("sg")).as("sg"),
         max(col("sgg")).as("sgg"))
   }
@@ -1383,7 +1383,7 @@ object AnalyticsQueries {
         org.apache.spark.sql.streaming.OutputMode.Update)
       sink
     })
-    s.read.parquet(out).groupBy("event_type", "day")
+    Tables.parquet(s, out).groupBy("event_type", "day")
       .agg(max(col("n")).as("n"))
   }
 
@@ -1462,7 +1462,7 @@ object AnalyticsQueries {
         org.apache.spark.sql.streaming.OutputMode.Append)
       sink
     })
-    s.read.parquet(out).filter(col("user_id") >= 0).groupBy("day")
+    Tables.parquet(s, out).filter(col("user_id") >= 0).groupBy("day")
       .agg(count(lit(1)).as("n_new_pairs"))
   }
 
@@ -1520,7 +1520,7 @@ object AnalyticsQueries {
         org.apache.spark.sql.streaming.OutputMode.Update)
       sink
     })
-    s.read.parquet(out).filter(col("user_id") >= 0).groupBy("user_id")
+    Tables.parquet(s, out).filter(col("user_id") >= 0).groupBy("user_id")
       .agg(max(col("stage")).as("stage"), max(col("t1")).as("t1"),
         max(col("t2")).as("t2"), max(col("t3")).as("t3"))
   }

@@ -752,7 +752,7 @@ object DocQueries {
     // A spec pins the consumer plan: parquet label scan + broadcast join,
     // zero shingle/minhash machinery.
     "q_dedup_labels_materialized" -> ((s, dir) => {
-      val lab = s.read.parquet(dedupLabelsArtifact(s, dir))
+      val lab = Tables.parquet(s, dedupLabelsArtifact(s, dir))
       val docs = Tables.documents(s, dir)
       docs.join(broadcast(lab), Seq("doc_id"), "left")
         .withColumn("rep", coalesce(col("rep"), col("doc_id")))
@@ -893,7 +893,7 @@ object DocQueries {
     // same oracle as q_mm_features: the artifact IS the media table.
     "q_mm_features_materialized" -> ((s, dir) => {
       import s.implicits._
-      val media = s.read.parquet(mediaArtifact(s, dir))
+      val media = Tables.parquet(s, mediaArtifact(s, dir))
         .as[Multimodal.MediaRecord]
       MediaCodec.decodeFeatures(s, media).toDF()
         .groupBy("kind").agg(

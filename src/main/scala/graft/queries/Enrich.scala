@@ -27,7 +27,12 @@ object Enrich {
 
   private def s(c: Column): Column = c.cast("string")
 
-  /** Spark-side derivation. Keep in lock-step with [[sqlCte]]. */
+  /** Spark-side derivation. Keep in lock-step with [[sqlCte]]: the same
+    * derived columns in the same order, plus the packed-Long IP twins that
+    * only Spark reads (EnrichSpec pins both the order and the one-Project
+    * shape). Input columns are kept as they are, so the input must not
+    * already carry a derived column name.
+    */
   def securityEvents(events: DataFrame): DataFrame = {
     val e = col("event_id")
     val u = col("user_id")
@@ -60,32 +65,34 @@ object Enrich {
         .when(e % 3 === 1, lit(8L * 16777216L + 8L * 65536L) + (u % 256) * 256L + e % 256)
         .otherwise(lit(172L * 16777216L) + (lit(16L) + u % 16) * 65536L +
           lit(5L * 256L) + e % 256)
-    events
-      .withColumn("source_ip", srcIp)
-      .withColumn("destination_ip", dstIp)
-      .withColumn("source_ip_packed", srcPacked)
-      .withColumn("destination_ip_packed", dstPacked)
-      .withColumn("destination_port", (e * 131) % 1000)
+    // one Project over the input: a withColumn chain re-analyses the
+    // growing plan once per column, and every dashboard query pays it
+    events.select(
+      col("*"),
+      srcIp.as("source_ip"),
+      dstIp.as("destination_ip"),
+      srcPacked.as("source_ip_packed"),
+      dstPacked.as("destination_ip_packed"),
+      ((e * 131) % 1000).as("destination_port"),
       // (e/11) decorrelates category from the mod-4/mod-3 IP branches so
       // composite category+CIDR predicates keep non-trivial selectivity
-      .withColumn("category", lit(4000L) + (e / 11).cast("long") % 48)
-      .withColumn("highlevelcategory", lit(3000L) + (u % 2) * 1000)
-      .withColumn("domain_id", (u % 25).cast("int"))
-      .withColumn("qid", e % 200)
-      .withColumn("device_type", (e % 5).cast("int"))
+      (lit(4000L) + (e / 11).cast("long") % 48).as("category"),
+      (lit(3000L) + (u % 2) * 1000).as("highlevelcategory"),
+      (u % 25).cast("int").as("domain_id"),
+      (e % 200).as("qid"),
+      (e % 5).cast("int").as("device_type"),
       // custom-property analogs used by the faithful AllowedInbound/
       // Outbound projections (reference: qradar/input/queries.json:2-3)
-      .withColumn("source_port", (e * 17) % 65536)
-      .withColumn("event_count", lit(1L) + e % 5)
-      .withColumn("rule_name", concat(lit("rule_"), s(e % 7)))
-      .withColumn("source_geo", concat(lit("geo_"), s(u % 30)))
-      .withColumn("dest_geo", concat(lit("geo_"), s((u + 7) % 30)))
-      .withColumn("mitre_tactic", concat(lit("TA00"), s(e % 10)))
-      .withColumn("mitre_technique", concat(lit("T1"), s(lit(100L) + e % 90)))
-      .withColumn("action",
-        when(e % 3 === 0, "permit").when(e % 3 === 1, "deny").otherwise("monitor"))
-      .withColumn("policy_name", concat(lit("policy_"), s(u % 12)))
-      .withColumn("log_source_id", (e % 100).cast("int"))
+      ((e * 17) % 65536).as("source_port"),
+      (lit(1L) + e % 5).as("event_count"),
+      concat(lit("rule_"), s(e % 7)).as("rule_name"),
+      concat(lit("geo_"), s(u % 30)).as("source_geo"),
+      concat(lit("geo_"), s((u + 7) % 30)).as("dest_geo"),
+      concat(lit("TA00"), s(e % 10)).as("mitre_tactic"),
+      concat(lit("T1"), s(lit(100L) + e % 90)).as("mitre_technique"),
+      when(e % 3 === 0, "permit").when(e % 3 === 1, "deny").otherwise("monitor").as("action"),
+      concat(lit("policy_"), s(u % 12)).as("policy_name"),
+      (e % 100).cast("int").as("log_source_id"))
   }
 
   /** DuckDB mirror of [[securityEvents]] as a CTE body. Oracle queries embed

@@ -213,7 +213,7 @@ object EventQueries {
         "ts", out)
       out
     })
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 
   /** Landing for q_maint_compaction: a deliberately FRAGMENTED
@@ -240,7 +240,7 @@ object EventQueries {
           s"$before -> $after over $parts partitions")
       out
     })
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 
   /** Landing for q_a3_incremental_refresh: the day-partitioned rollup
@@ -277,7 +277,7 @@ object EventQueries {
       }
       out
     })
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 
   /** Shared streaming-parity landing: drain `stream` into `sink` as
@@ -315,7 +315,7 @@ object EventQueries {
       // streaming sources need a pinned schema — one metadata-only batch
       // read supplies it (S4's schema-union inference, never first-row)
       Tables.ensureNanosConf(s) // schema probe hits TIMESTAMP(NANOS) too
-      val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
+      val rawSchema = Tables.read(s, dir, "events").schema
       // the file source wants a directory; glob-filter it to the events table
       val stream = s.readStream.schema(rawSchema)
         .option("pathGlobFilter", "events.parquet").parquet(dir)
@@ -327,7 +327,7 @@ object EventQueries {
         withBatchId = true)
       sink
     })
-    s.read.parquet(out)
+    Tables.parquet(s, out)
   }
 
   /** S1 LIVE-SOURCE PARITY — the graft-events DSv2 connector driven as a
@@ -351,7 +351,7 @@ object EventQueries {
         org.apache.spark.sql.streaming.OutputMode.Append)
       sink
     })
-    s.read.parquet(out)
+    Tables.parquet(s, out)
   }
 
   /** STREAMING DEDUP PATH — file source -> watermarked
@@ -368,7 +368,7 @@ object EventQueries {
       val root = java.nio.file.Files.createTempDirectory("graft_stream_dedup_").toString
       val sink = s"$root/out"; val ckpt = s"$root/ckpt"
       Tables.ensureNanosConf(s) // schema probe hits TIMESTAMP(NANOS) too
-      val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
+      val rawSchema = Tables.read(s, dir, "events").schema
       val stream = s.readStream.schema(rawSchema)
         .option("pathGlobFilter", "events.parquet").parquet(dir)
       val ev = Tables.normalizeTs(stream)
@@ -380,7 +380,7 @@ object EventQueries {
         sink, ckpt, org.apache.spark.sql.streaming.OutputMode.Append)
       sink
     })
-    s.read.parquet(out)
+    Tables.parquet(s, out)
   }
 
   /** S9 PUSH PARITY — the HttpPushSink transport chain executed for real:
@@ -459,7 +459,7 @@ object EventQueries {
             "cross-batch emission voids exact batch equality")
       sink
     })
-    s.read.parquet(out)
+    Tables.parquet(s, out)
   }
 
   /** STREAM-STREAM JOIN PARITY — the watermarked interval join landed and
@@ -475,7 +475,7 @@ object EventQueries {
       val root = java.nio.file.Files.createTempDirectory("graft_stream_join_").toString
       val sink = s"$root/out"; val ckpt = s"$root/ckpt"
       Tables.ensureNanosConf(s)
-      val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
+      val rawSchema = Tables.read(s, dir, "events").schema
       def side(eventType: String, key: String, ts: String) =
         Tables.normalizeTs(s.readStream.schema(rawSchema)
           .option("pathGlobFilter", "events.parquet").parquet(dir))
@@ -489,7 +489,7 @@ object EventQueries {
         sink, ckpt, org.apache.spark.sql.streaming.OutputMode.Append)
       sink
     })
-    s.read.parquet(out)
+    Tables.parquet(s, out)
   }
 
   /** KAFKA-SHAPE DECODE PARITY — the topic round-trip without a broker:
@@ -518,7 +518,7 @@ object EventQueries {
         sink, ckpt, org.apache.spark.sql.streaming.OutputMode.Append)
       sink
     })
-    s.read.parquet(out)
+    Tables.parquet(s, out)
   }
 
   /** HLL registers computed BY THE STREAMING PATH: JSON topic -> decode ->
@@ -551,7 +551,7 @@ object EventQueries {
         org.apache.spark.sql.streaming.OutputMode.Update)
       sink
     })
-    s.read.parquet(out)
+    Tables.parquet(s, out)
       .groupBy("event_type", "reg_idx").agg(max(col("rho")).as("rho"))
   }
 
@@ -585,7 +585,7 @@ object EventQueries {
         org.apache.spark.sql.streaming.OutputMode.Update)
       sink
     })
-    s.read.parquet(out)
+    Tables.parquet(s, out)
       .groupBy("event_type", "bin").agg(max(col("cnt")).as("cnt"))
   }
 

@@ -699,7 +699,7 @@ object PipelineQueries {
     // folded to undirected distinct pairs — proving the artifact IS the
     // graph, not a cache of convenience.
     "q_knn_edges_materialized" -> ((s, dir) =>
-      s.read.parquet(knnEdgesArtifact(s, dir))),
+      Tables.parquet(s, knnEdgesArtifact(s, dir))),
 
     // INCREMENTAL maintenance of the kNN-graph artifact (the r10 verdict
     // item: the ANN build was the last full-rebuild cost in an otherwise
@@ -735,7 +735,7 @@ object PipelineQueries {
     // argmax, no vector math. Output is the (true, predicted) confusion
     // census, so the oracle also pins classification quality drift.
     "q_graph_knn_classify" -> ((s, dir) => {
-      val e = s.read.parquet(knnEdgesArtifact(s, dir))
+      val e = Tables.parquet(s, knnEdgesArtifact(s, dir))
       val syme = e.select(col("a").as("node"), col("b").as("nb"))
         .unionAll(e.select(col("b").as("node"), col("a").as("nb")))
       val em = Tables.embeddings(s, dir)
@@ -764,7 +764,7 @@ object PipelineQueries {
     // heavy-tailed histogram flags hub vectors that would skew every
     // downstream wedge join). Two aggregates over the edge artifact.
     "q_graph_degree_hist" -> ((s, dir) => {
-      val e = s.read.parquet(knnEdgesArtifact(s, dir))
+      val e = Tables.parquet(s, knnEdgesArtifact(s, dir))
       e.select(col("a").as("node")).unionAll(e.select(col("b").as("node")))
         .groupBy("node").agg(count(lit(1)).as("deg"))
         .groupBy("deg").agg(count(lit(1)).as("n_nodes"),
@@ -779,7 +779,7 @@ object PipelineQueries {
     // log-diameter rounds, labels are node ids so the oracle replays it
     // as a recursive reachability closure). Census per component.
     "q_graph_cc" -> ((s, dir) => {
-      val e = s.read.parquet(knnEdgesArtifact(s, dir))
+      val e = Tables.parquet(s, knnEdgesArtifact(s, dir))
         .select(col("a").as("i"), col("b").as("j"))
       // the kNN graph is one near-giant component: convergence rounds
       // grow ~log₂(N) with pointer jumping, and the dedup default (15)
@@ -800,7 +800,7 @@ object PipelineQueries {
     // bounded-degree graph is linear in the corpus, never the |V|³ of
     // the dense form.
     "q_graph_triangles" -> ((s, dir) => {
-      val e = CacheRegistry.persist(s.read.parquet(knnEdgesArtifact(s, dir)))
+      val e = CacheRegistry.persist(Tables.parquet(s, knnEdgesArtifact(s, dir)))
       val tri = e.join(e.toDF("b", "c"), "b").join(e.toDF("a", "c"), Seq("a", "c"))
       tri.agg(count(lit(1)).as("n_triangles"))
         .crossJoin(e.agg(count(lit(1)).as("n_edges")))
@@ -927,7 +927,7 @@ object PipelineQueries {
     // table. Edges come from the materialized artifact
     // ([[knnEdgesArtifact]]) — no per-kernel ANN rebuild.
     "q_graph_clustering_coef" -> ((s, dir) => {
-      val e = CacheRegistry.persist(s.read.parquet(knnEdgesArtifact(s, dir)))
+      val e = CacheRegistry.persist(Tables.parquet(s, knnEdgesArtifact(s, dir)))
       val deg = e.select(col("a").as("node"))
         .unionAll(e.select(col("b").as("node")))
         .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -982,12 +982,12 @@ object PipelineQueries {
     // equal to the derivation, not just present.
     "q_ir_index_materialized" -> ((s, dir) => {
       val root = irIndexArtifact(s, dir)
-      s.read.parquet(root + "/postings")
+      Tables.parquet(s, root + "/postings")
         .withColumn("w", col("tf") * expr("1000000 div df"))
         .groupBy("id", "isq")
         .agg(count(lit(1)).as("n_terms"), sum(col("tf")).as("kept_tf"),
           sum(col("w")).as("sum_w"))
-        .join(s.read.parquet(root + "/doclen"), "id")
+        .join(Tables.parquet(s, root + "/doclen"), "id")
     }),
 
     // INCREMENTAL maintenance of the inverted index (the IR sibling of
@@ -1017,8 +1017,8 @@ object PipelineQueries {
     // tokenization-free consumer plan.
     "q_sim_bm25" -> ((s, dir) => {
       val root = irIndexArtifact(s, dir)
-      TA.bm25FromIndex(s.read.parquet(root + "/postings"),
-        s.read.parquet(root + "/doclen"), k = 5)
+      TA.bm25FromIndex(Tables.parquet(s, root + "/postings"),
+        Tables.parquet(s, root + "/doclen"), k = 5)
     }),
 
     // Sparse tf-idf cosine — scores off the MATERIALIZED index
@@ -1026,7 +1026,7 @@ object PipelineQueries {
     // TA.sparseCosineTopK's spec and the Recall harness.
     "q_sim_sparse_cosine" -> ((s, dir) => {
       val root = irIndexArtifact(s, dir)
-      TA.sparseCosineFromIndex(s.read.parquet(root + "/postings"), k = 5)
+      TA.sparseCosineFromIndex(Tables.parquet(s, root + "/postings"), k = 5)
     }),
 
     // Reciprocal-rank fusion of the two lexical rankers — the ensemble
@@ -1039,8 +1039,8 @@ object PipelineQueries {
     // join, ties break on doc id. Top-3 fused per query.
     "q_sim_rrf_hybrid" -> ((s, dir) => {
       val root = irIndexArtifact(s, dir)
-      val post = s.read.parquet(root + "/postings")
-      val bm = TA.bm25FromIndex(post, s.read.parquet(root + "/doclen"), k = 5)
+      val post = Tables.parquet(s, root + "/postings")
+      val bm = TA.bm25FromIndex(post, Tables.parquet(s, root + "/doclen"), k = 5)
         .select(col("qid"), col("did"), expr("1000000 div (60 + rnk)").as("c1"))
       val cos = TA.sparseCosineFromIndex(post, k = 5)
         .select(col("qid"), col("did"), expr("1000000 div (60 + rnk)").as("c2"))
@@ -1769,7 +1769,7 @@ object PipelineQueries {
         org.apache.spark.sql.streaming.OutputMode.Update)
       sink
     })
-    s.read.parquet(out).groupBy("s", "b").agg(max(col("c")).as("c"))
+    Tables.parquet(s, out).groupBy("s", "b").agg(max(col("c")).as("c"))
   }
 
   private val streamDeconPaths = scala.collection.concurrent.TrieMap.empty[String, String]
@@ -1794,7 +1794,7 @@ object PipelineQueries {
         org.apache.spark.sql.streaming.OutputMode.Update)
       sink
     })
-    s.read.parquet(out).groupBy("doc_id").agg(max(col("n_overlap")).as("n_overlap"))
+    Tables.parquet(s, out).groupBy("doc_id").agg(max(col("n_overlap")).as("n_overlap"))
   }
 
   /** Landing for [[queries q_t10_streaming_ivf]] (one per sfDir per JVM,
@@ -1827,7 +1827,7 @@ object PipelineQueries {
         org.apache.spark.sql.streaming.OutputMode.Update)
       sink
     })
-    s.read.parquet(out).groupBy("cell")
+    Tables.parquet(s, out).groupBy("cell")
       .agg(max(col("n_members")).as("n_members"),
         max(col("id_checksum")).as("id_checksum"),
         max(col("inertia")).as("inertia"))
@@ -1896,7 +1896,7 @@ object PipelineQueries {
         org.apache.spark.sql.streaming.OutputMode.Update)
       sink
     })
-    s.read.parquet(out).groupBy("j")
+    Tables.parquet(s, out).groupBy("j")
       .agg(max(col("n_dups")).as("n_dups"), min(col("first_dup")).as("first_dup"),
         max(col("max_cos")).as("max_cos"))
   }
@@ -1969,7 +1969,7 @@ object PipelineQueries {
         org.apache.spark.sql.streaming.OutputMode.Update)
       sink
     })
-    s.read.parquet(out).groupBy("j")
+    Tables.parquet(s, out).groupBy("j")
       .agg(max(col("n_dups")).as("n_dups"), min(col("first_dup")).as("first_dup"),
         max(col("max_cos")).as("max_cos"))
   }
@@ -2013,7 +2013,7 @@ object PipelineQueries {
     })
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("lang").orderBy(col("total").desc)
-    val fin = s.read.parquet(out)
+    val fin = Tables.parquet(s, out)
       .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
     val cands = fin.select(col("lang"), col("total"),
       explode(col("cands")).as("token"))

@@ -524,7 +524,7 @@ object QualityQueries {
         org.apache.spark.sql.streaming.OutputMode.Update)
       sink
     })
-    s.read.parquet(out).agg(max(col("t")).as("t"), max(col("g0")).as("g0"),
+    Tables.parquet(s, out).agg(max(col("t")).as("t"), max(col("g0")).as("g0"),
       max(col("g1")).as("g1"), max(col("g2")).as("g2"), max(col("g3")).as("g3"))
   }
 
@@ -555,7 +555,7 @@ object QualityQueries {
         org.apache.spark.sql.streaming.OutputMode.Update)
       sink
     })
-    s.read.parquet(out).groupBy("day").agg(max(col("n")).as("n"))
+    Tables.parquet(s, out).groupBy("day").agg(max(col("n")).as("n"))
   }
 
   /** Shared oracle for the batch and streamed audit manifests. */
@@ -608,7 +608,7 @@ object QualityQueries {
         org.apache.spark.sql.streaming.OutputMode.Update, withBatchId = true)
       sink
     })
-    s.read.parquet(out).groupBy("day")
+    Tables.parquet(s, out).groupBy("day")
       .agg(max_by(col("n"), col("batch_id")).as("n"),
         max_by(col("hsum"), col("batch_id")).as("hsum"))
   }
@@ -722,7 +722,7 @@ object QualityQueries {
         org.apache.spark.sql.streaming.OutputMode.Update)
       sink
     })
-    s.read.parquet(out).groupBy("bin").agg(max(col("cb")).as("cb"))
+    Tables.parquet(s, out).groupBy("bin").agg(max(col("cb")).as("cb"))
   }
 
   private def numProfileSql(c: String, q: Long): String =

@@ -106,7 +106,7 @@ object ViewQueries {
   /** `GLOBALVIEW(name, 'NORMAL')` — scan the materialized view. */
   def globalView(s: SparkSession, dir: String, name: String): DataFrame = {
     require(definitions.contains(name), s"unknown GLOBALVIEW '$name'")
-    s.read.parquet(s"${store(s, dir)}/$name")
+    Tables.parquet(s, s"${store(s, dir)}/$name")
   }
 
   /** The parameterized scan template shared by the whole extended corpus:

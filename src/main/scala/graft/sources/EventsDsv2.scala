@@ -104,7 +104,7 @@ object EventsApi {
       val out = java.nio.file.Files
         .createTempDirectory("graft_dsv2_events_").toString + "/events"
       Tables.ensureNanosConf(s)
-      withTsNanos(s.read.parquet(s"$dir/events.parquet"))
+      withTsNanos(Tables.read(s, dir, "events"))
         .repartitionByRange(4, org.apache.spark.sql.functions.col("ts_nanos"))
         .write.json(out)
       writeStats(s, out)

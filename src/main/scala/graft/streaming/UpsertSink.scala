@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import graft.sources.Tables
 
 /** Streaming UPSERT sink: maintains a compacted latest-per-key state
   * table under `statePath` from a change stream — the Delta-style
@@ -152,7 +153,7 @@ object UpsertSink {
                 .map(v => new Path(sp, s"bucket=$v"))
                 .filter(hasDataFile(fs, _)).map(_.toString)
               if (dirs.isEmpty) b.limit(0)
-              else s.read.option("basePath", statePath).parquet(dirs: _*)
+              else Tables.parquet(s, dirs, Map("basePath" -> statePath))
                 .withColumn("bucket", col("bucket").cast("long"))
                 .filter(col("bucket").isin(touched.toSeq: _*))
             } else b.limit(0)
