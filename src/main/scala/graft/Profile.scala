@@ -5,7 +5,9 @@ import graft.ops.CacheRegistry
 
 /** Ad-hoc profiling harness: times named queries (all when no names given)
   * and prints the formatted physical plan, so plan regressions are visible
-  * without waiting for the driver's bench round.
+  * without waiting for a full bench round. Each query is built and
+  * executed once; `PROFILE_EXPLAIN=1` prints that run's formatted plan and
+  * `PROFILE_EXECUTED=1` its AQE-final physical plan.
   * Usage: runMain graft.Profile <sfDir> [query ...]
   */
 object Profile {
@@ -19,22 +21,19 @@ object Profile {
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     names.foreach { name =>
-      val fn = SparkEntry.queries(name)
       val t0 = System.nanoTime()
-      val n = fn(spark, sfDir).count()
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      // run THIS frame's own plan (a .count() would plan and execute a
+      // separate aggregate query): the plans printed below are then the
+      // AQE-final plans of exactly what was timed, with no rebuild
+      val n = df.queryExecution.executedPlan.execute().count()
       val sec = (System.nanoTime() - t0) / 1e9
       println(f"[profile] $name%-28s $sec%8.2fs rows=$n")
-      if (sys.env.contains("PROFILE_EXPLAIN")) fn(spark, sfDir).explain("formatted")
+      if (sys.env.contains("PROFILE_EXPLAIN")) df.explain("formatted")
       // POST-EXECUTION plan: AQE's final stages (join strategy switches,
       // coalesced reads, reused exchanges/stages) only exist after the
       // action — explain() before execution shows isFinalPlan=false trees
-      if (sys.env.contains("PROFILE_EXECUTED")) {
-        // drive THIS queryExecution's plan (a .count() would execute a
-        // separate aggregate query and leave this AQE tree un-finalized)
-        val qe = fn(spark, sfDir).queryExecution
-        qe.executedPlan.execute().count()
-        println(qe.executedPlan.toString)
-      }
+      if (sys.env.contains("PROFILE_EXECUTED")) println(df.queryExecution.executedPlan.toString)
       // operators persist() shared subplans; drop them so later queries in
       // this session are not measured under accumulated storage pressure
       CacheRegistry.drain()

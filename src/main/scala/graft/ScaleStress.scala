@@ -201,7 +201,7 @@ object ScaleStress {
     // sketches) and window partition count grow ×replicas while per-user
     // history stays the original's.
     Tables.ensureNanosConf(spark)
-    val ev = spark.read.parquet(s"$src/events.parquet")
+    val ev = Tables.read(spark, src, "events")
     val maxEvent = ev.agg(max("event_id")).head().getLong(0) + 1
     val maxUser = ev.agg(max("user_id")).head().getLong(0) + 1
     ev.crossJoin(reps)
@@ -218,7 +218,7 @@ object ScaleStress {
     // and values carry through — per-replica distributions are the
     // original's, so PSI/profile answers stay comparable while row counts
     // grow ×replicas.
-    val ord = spark.read.parquet(s"$src/orders.parquet")
+    val ord = Tables.read(spark, src, "orders")
     val maxOrd = ord.agg(max("o_orderkey")).head().getLong(0) + 1
     ord.crossJoin(reps)
       .select((col("o_orderkey") + col("rep") * maxOrd).as("o_orderkey"),
@@ -226,7 +226,7 @@ object ScaleStress {
         col("o_orderdate"), col("o_orderpriority"))
       .coalesce(8)
       .write.mode("overwrite").parquet(s"$out/orders.parquet")
-    val li = spark.read.parquet(s"$src/lineitem.parquet")
+    val li = Tables.read(spark, src, "lineitem")
     li.crossJoin(reps)
       .select((col("l_orderkey") + col("rep") * maxOrd).as("l_orderkey"),
         col("l_partkey"), col("l_suppkey"), col("l_linenumber"),
@@ -238,7 +238,7 @@ object ScaleStress {
     // Part passes through UNreplicated: it is the dimension side (brands,
     // types) — at scale the fact tables grow while the dim stays fixed,
     // which is exactly the regime the assoc-rules pair bound relies on.
-    spark.read.parquet(s"$src/part.parquet")
+    Tables.read(spark, src, "part")
       .coalesce(2)
       .write.mode("overwrite").parquet(s"$out/part.parquet")
     out
@@ -267,8 +267,8 @@ object ScaleStress {
     }
 
     val big = buildFixture(spark, sfDir, replicas)
-    val nDocs = spark.read.parquet(s"$big/documents.parquet").count()
-    val nVecs = spark.read.parquet(s"$big/embeddings.parquet").count()
+    val nDocs = Tables.read(spark, big, "documents").count()
+    val nVecs = Tables.read(spark, big, "embeddings").count()
     clean()
 
     val rows = queries.map { q =>

@@ -1,9 +1,12 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import graft.ops.CacheRegistry
-import java.nio.file.{Files, Paths}
+import java.io.File
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.ObjectMapper
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare, and
+  * failures.json (query name → error message; `{}` when every query ran). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -15,6 +18,7 @@ object Verify {
     // local-iteration filter: SPARK_GRAFT_ONLY=q_a,q_b dumps just those
     // queries; unset (the driver's invocation) dumps everything
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    val failures = new java.util.TreeMap[String, String]()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
@@ -22,26 +26,18 @@ object Verify {
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failures.put(name, Option(e.getMessage).getOrElse(e.toString))
       }
       CacheRegistry.drain()
       spark.catalog.clearCache()
       System.gc()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // Jackson escapes every control character: a tab or CR in the SQL must
+    // not make the compare's json.load fail and silently zero correctness
+    val mapper = new ObjectMapper()
+    mapper.writeValue(new File(s"$outDir/oracle_sql.json"),
+      new java.util.TreeMap[String, String](SparkEntry.oracleSql.asJava))
+    mapper.writeValue(new File(s"$outDir/failures.json"), failures)
     spark.stop()
   }
 }

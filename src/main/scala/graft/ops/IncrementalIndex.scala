@@ -25,9 +25,6 @@ import graft.sources.Tables
   */
 object IncrementalIndex {
 
-  private def hasData(fs: org.apache.hadoop.fs.FileSystem, p: Path) =
-    graft.streaming.UpsertSink.hasDataFile(fs, p)
-
   /** IVF-cell kNN-graph store. Layout under `root`:
     *  - `centroids/` (cid, q): the snapshot-trained k-means cells —
     *    FROZEN at build (the IVF discipline: cells define the index;
@@ -105,14 +102,10 @@ object IncrementalIndex {
         dAss.repartition(col("cell"))
           .write.mode(SaveMode.Append).partitionBy("cell")
           .parquet(s"$root/assign")
-        val sp = new Path(s"$root/assign")
-        val fs = sp.getFileSystem(s.sparkContext.hadoopConfiguration)
-        def cellDirs(cells: Seq[Long]): Seq[String] = cells
-          .map(v => new Path(sp, s"cell=$v")).filter(hasData(fs, _))
-          .map(_.toString)
+        // every touched cell holds the rows just appended, and every
+        // probe list below includes a touched cell: the read is never empty
         def readCells(cells: Seq[Long]): DataFrame =
-          Tables.parquet(s, cellDirs(cells), Map("basePath" -> s"$root/assign"))
-            .withColumn("cell", col("cell").cast("long"))
+          StoreCommit.readTouched(s, s"$root/assign", "cell", cells).get
         // 2. touched queries: every vector PROBING a touched cell (its
         //    candidate set changed) — O(touched-cell rows), partition-
         //    pruned; includes the delta vectors themselves (their rows
@@ -144,28 +137,15 @@ object IncrementalIndex {
         val newE = newEdges.join(pcellMap, "query_id")
         // 5. rewrite ONLY the edge partitions holding touched queries:
         //    keep co-located untouched queries' rows, replace the
-        //    touched set's, dynamic-overwrite those pcells (the
-        //    refreshAdditive read-then-replace discipline)
+        //    touched set's (StoreCommit, as refreshAdditive does)
         val touchedPcells = pcellMap.select("pcell").distinct()
           .collect().map(_.getLong(0))
-        val ep = new Path(s"$root/edges")
-        val edirs = touchedPcells.toIndexedSeq
-          .map(v => new Path(ep, s"pcell=$v")).filter(hasData(fs, _))
-          .map(_.toString)
-        val oldKept =
-          if (edirs.isEmpty)
-            newE.limit(0)
-          else Tables.parquet(s, edirs, Map("basePath" -> s"$root/edges"))
-            .withColumn("pcell", col("pcell").cast("long"))
-            .join(broadcast(qProbe.select(col("id").as("query_id")).distinct()),
-              Seq("query_id"), "left_anti")
-        val merged = oldKept.unionByName(newE.select(oldKept.columns.map(col): _*))
+        val merged = StoreCommit.readTouched(s, s"$root/edges", "pcell", touchedPcells.toSeq)
+          .map(_.join(broadcast(qProbe.select(col("id").as("query_id")).distinct()),
+            Seq("query_id"), "left_anti"))
+          .fold(newE)(_.unionByName(newE))
           .repartition(col("pcell")) // one file per touched pcell, not per task
-        val snap = merged.localCheckpoint(true)
-        snap.write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("pcell").parquet(s"$root/edges")
-        snap.unpersist(blocking = true)
+        StoreCommit.replace(s, s"$root/edges", merged, "pcell")
         CacheRegistry.release(qProbe)
       }
       CacheRegistry.release(dAss)
@@ -295,14 +275,9 @@ object IncrementalIndex {
           .repartition(col("fcell"))
           .write.mode(SaveMode.Append).partitionBy("fcell")
           .parquet(s"$root/assign")
-        val sp = new Path(s"$root/assign")
-        val fs = sp.getFileSystem(s.sparkContext.hadoopConfiguration)
-        def cellDirs(cells: Seq[Long]): Seq[String] = cells
-          .map(v => new Path(sp, s"fcell=$v")).filter(hasData(fs, _))
-          .map(_.toString)
+        // never empty, for the same reason as in Knn.refresh
         def readCells(cells: Seq[Long]): DataFrame =
-          Tables.parquet(s, cellDirs(cells), Map("basePath" -> s"$root/assign"))
-            .withColumn("fcell", col("fcell").cast("long"))
+          StoreCommit.readTouched(s, s"$root/assign", "fcell", cells).get
         // touched queries: every vector PROBING a touched fine cell —
         // partition-pruned store read, O(touched fine-cell rows)
         val qvecs = readCells(touched.toIndexedSeq)
@@ -329,24 +304,12 @@ object IncrementalIndex {
         val newE = newEdges.join(pfcellMap, "query_id")
         val touchedPcells = pfcellMap.select("pfcell").distinct()
           .collect().map(_.getLong(0))
-        val ep = new Path(s"$root/edges")
-        val edirs = touchedPcells.toIndexedSeq
-          .map(v => new Path(ep, s"pfcell=$v")).filter(hasData(fs, _))
-          .map(_.toString)
-        val oldKept =
-          if (edirs.isEmpty)
-            newE.limit(0)
-          else Tables.parquet(s, edirs, Map("basePath" -> s"$root/edges"))
-            .withColumn("pfcell", col("pfcell").cast("long"))
-            .join(broadcast(qTag.select(col("id").as("query_id")).distinct()),
-              Seq("query_id"), "left_anti")
-        val merged = oldKept.unionByName(newE.select(oldKept.columns.map(col): _*))
+        val merged = StoreCommit.readTouched(s, s"$root/edges", "pfcell", touchedPcells.toSeq)
+          .map(_.join(broadcast(qTag.select(col("id").as("query_id")).distinct()),
+            Seq("query_id"), "left_anti"))
+          .fold(newE)(_.unionByName(newE))
           .repartition(col("pfcell"))
-        val snap = merged.localCheckpoint(true)
-        snap.write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("pfcell").parquet(s"$root/edges")
-        snap.unpersist(blocking = true)
+        StoreCommit.replace(s, s"$root/edges", merged, "pfcell")
         CacheRegistry.release(qTag)
       }
       CacheRegistry.release(dTag)

@@ -167,7 +167,7 @@ object Rollup {
   /** O(touched) additive refresh of a partitioned STATS store: merge the
     * delta's partials (same schema as the store) into the touched
     * partitions only — the stats sibling of [[refreshAdditive]], sharing
-    * its directory-targeted read + dynamic-overwrite core. `partKeyOf`
+    * its touched-partition read-back + [[StoreCommit]] core. `partKeyOf`
     * derives the partition value from the store's time column (the
     * caller's layout choice: days for the hourly rung, months for daily,
     * years for monthly).
@@ -278,7 +278,8 @@ object Rollup {
     * registerStatsLadder on EVERY invocation (clear()-resilience), and the
     * full derivation — three optimized-plan traces + three parquet
     * re-analyses + signature probes — measured ~0.31 s/call at sf0.1
-    * (tools.NavOverhead), the bulk of the nav family's fixed cost. When all
+    * (SCALE.md "Round-14: nav-family fixed overhead attribution"), the
+    * bulk of the nav family's fixed cost. When all
     * rung keys are still live the re-arm is a map lookup. build/refresh
     * invalidate (store contents changed ⇒ the cached LogicalRelation's file
     * list is stale); RollupNavigation.clear() empties the registration
@@ -398,7 +399,7 @@ object Rollup {
     *  2. read back ONLY the partitions the delta touches;
     *  3. merge additively (sums/counts re-aggregate exactly — the store
     *     columns must be mergeable measures, the engine-wide discipline)
-    *     and dynamically overwrite just those partitions.
+    *     and replace just those partitions ([[StoreCommit.replace]]).
     *
     * Work per refresh is O(delta + touched-partition state), never
     * O(store) — with time-correlated deltas (the normal case: late data
@@ -407,8 +408,7 @@ object Rollup {
     * UpsertSink's latest-per-key merge, additive refresh applied twice
     * double-counts — callers running under at-least-once delivery must
     * dedup deltas upstream (exact dedup or the batch-id landing
-    * discipline). `localCheckpoint` materializes the merge before the
-    * overwrite commits (the read-then-replace rule).
+    * discipline).
     */
   def refreshAdditive(spark: org.apache.spark.sql.SparkSession, path: String,
                       delta: DataFrame, partCol: String, keyCols: Seq[String],
@@ -420,9 +420,8 @@ object Rollup {
   /** Generic O(touched) partition-merge core shared by [[refreshAdditive]]
     * (SUM-only stores) and [[refreshStatsAdditive]] (full stats partials):
     * pre-aggregate the delta on (partCol, keyCols) with `mergeAggs`, read
-    * back ONLY the touched partitions (directory-targeted for primitive
-    * partition values), re-merge with the same aggregates, and
-    * dynamic-overwrite the touched partitions — untouched files are never
+    * back ONLY the touched partitions, re-merge with the same aggregates,
+    * and replace the touched partitions — untouched files are never
     * rewritten. Requires every merge aggregate to be RE-AGGREGABLE
     * (merge(old partial, delta partial) == partial of the union): sums,
     * counts-as-sums, min/max, and KMV sketch merges all are.
@@ -432,72 +431,19 @@ object Rollup {
                                   partCol: String, keyCols: Seq[String],
                                   mergeAggs: Seq[org.apache.spark.sql.Column]): Unit = {
     val grain = (partCol +: keyCols).map(c => col(s"`$c`"))
-    val agg = mergeAggs
-    val d = delta.groupBy(grain: _*).agg(agg.head, agg.tail: _*)
+    val d = delta.groupBy(grain: _*).agg(mergeAggs.head, mergeAggs.tail: _*)
     val touched = d.select(col(s"`$partCol`")).distinct().collect().map(_.get(0))
     if (touched.nonEmpty) {
-      // Hadoop FS, not java.io.File: the store lives wherever the
-      // warehouse does (HDFS/S3 at scale; local disk here)
-      val sp = new org.apache.hadoop.fs.Path(path)
-      val fs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // null-SAFE touched-partition match: isin() is three-valued and
-      // never matches stored null-partition rows, so a delta touching
-      // the null partition would read back nothing and dynamic
-      // overwrite would replace its accumulated state with delta-only
-      // sums — silent additive-state loss. <=> matches null to null.
-      val touchedPred = touched.toIndexedSeq
-        .map(v => col(s"`$partCol`") <=> lit(v)).reduce(_ || _)
-      // O(touched) LISTING, not just O(touched) read: `read.parquet(root)`
-      // lists EVERY partition directory before pruning — a store-size-
-      // dependent metadata cost that dominates the refresh once the store
-      // holds years of days (measured: 1.8× at 10× partitions in
-      // SinkStress before this). Primitive-valued partitions address
-      // their directories straight off (`day=5`); null or non-primitive
-      // values fall back to the full listing, where the predicate alone
-      // prunes. The filter stays on top either way — directory targeting
-      // is an optimization, never the correctness boundary.
-      val directDirs: Option[Seq[org.apache.hadoop.fs.Path]] =
-        if (touched.forall {
-          case _: java.lang.Long | _: java.lang.Integer |
-               _: java.lang.Short | _: java.lang.Byte => true
-          case _ => false
-        }) Some(touched.toIndexedSeq.map(v =>
-          new org.apache.hadoop.fs.Path(sp, s"$partCol=$v")))
-        else None
-      val cur =
-        if (fs.exists(sp)) directDirs match {
-          case Some(dirs) =>
-            // skip dirs holding no data file (a torn dynamic overwrite
-            // can leave an empty partition dir; reading it fails with
-            // "Unable to infer schema"), and cast the dir-name-inferred
-            // partition column back to the delta's type explicitly
-            // rather than leaning on unionByName coercion
-            val existing = dirs
-              .filter(p => fs.exists(p) &&
-                fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet")))
-              .map(_.toString)
-            if (existing.isEmpty) d.limit(0)
-            else Tables.parquet(spark, existing, Map("basePath" -> path))
-              .withColumn(partCol, col(s"`$partCol`")
-                .cast(d.schema(partCol).dataType))
-              .filter(touchedPred)
-          case None => Tables.parquet(spark, path).filter(touchedPred)
-        }
-        else d.limit(0)
-      // cluster by the partition value before materializing: a dynamic-
-      // partition write opens one file per (input partition × partition
-      // value) — a 256-partition merge output touching 16 pkeys commits
-      // ~4k tiny files, and the file open/commit overhead dominates a
-      // small refresh (measured 15x on the Ir tf append, same shape)
-      val merged = cur.unionByName(d)
-        .groupBy(grain: _*).agg(agg.head, agg.tail: _*)
+      // cluster by the partition value before the write: a partitioned
+      // write opens one file per (input partition × partition value) — a
+      // 256-partition merge output touching 16 pkeys commits ~4k tiny
+      // files, and the file open/commit overhead dominates a small
+      // refresh (measured 15x on the Ir tf append, same shape)
+      val merged = StoreCommit.readTouched(spark, path, partCol, touched.toSeq)
+        .fold(d)(_.unionByName(d))
+        .groupBy(grain: _*).agg(mergeAggs.head, mergeAggs.tail: _*)
         .repartition(col(s"`$partCol`"))
-      val snap = merged.localCheckpoint(true)
-      snap.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partCol)
-        .parquet(path)
-      snap.unpersist(blocking = true)
+      StoreCommit.replace(spark, path, merged, partCol)
     }
   }
 
@@ -511,14 +457,9 @@ object Rollup {
     *
     * One shuffle re-clusters rows by the partition value (plus a
     * deterministic row-hash salt when `filesPerPartition` > 1 — content-
-    * derived, so the layout is reproducible), then dynamic partition
-    * overwrite rewrites each partition's files in place; rows never
-    * change, only their file grouping. `localCheckpoint` materializes the
-    * shuffle before the overwrite commits (the UpsertSink read-then-
-    * replace discipline). Compacting a SUBSET of partitions (the usual
-    * incremental maintenance) is the same call with a pre-filtered frame;
-    * untouched partitions are never rewritten under dynamic overwrite.
-    * Returns (partitions, filesBefore, filesAfter).
+    * derived, so the layout is reproducible), then [[StoreCommit.replace]]
+    * swaps in each partition's new files; rows never change, only their
+    * file grouping. Returns (partitions, filesBefore, filesAfter).
     */
   def compactPartitions(spark: org.apache.spark.sql.SparkSession, path: String,
                         partCol: String, filesPerPartition: Int = 1): (Long, Long, Long) = {
@@ -532,6 +473,7 @@ object Rollup {
       while (it.hasNext) { if (it.next().getPath.getName.endsWith(".parquet")) n += 1L }
       n
     }
+    StoreCommit.recover(fs, root) // census and read see a committed store
     val before = dataFiles()
     val df = Tables.parquet(spark, path)
     val dataCols = df.columns.filter(_ != partCol).toIndexedSeq
@@ -539,12 +481,7 @@ object Rollup {
       if (filesPerPartition == 1) df.repartition(col(partCol))
       else df.repartition(col(partCol),
         pmod(hash(dataCols.map(c => col(s"`$c`")): _*), lit(filesPerPartition)))
-    val snap = clustered.localCheckpoint(true)
-    snap.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partCol)
-      .parquet(path)
-    snap.unpersist(blocking = true)
+    StoreCommit.replace(spark, path, clustered, partCol)
     val parts = fs.listStatus(root)
       .count(st => st.isDirectory && st.getPath.getName.startsWith(s"$partCol="))
       .toLong

@@ -34,10 +34,6 @@ object EventQueries {
     * the daily, month/quarter/year the monthly (see
     * `q_a2_reagg_navigated`, `q_a2_nav_filtered`, `q_a2_nav_mixed`,
     * `q_a2_nav_monthly`). */
-  /** Diagnostic hook: what every nav query re-pays per call (tools.NavOverhead). */
-  private[graft] def navReadyForDiag(s: SparkSession, dir: String): Unit =
-    navigationReady(s, dir)
-
   private def navigationReady(s: SparkSession, dir: String): Unit = {
     // BUILD once per fixture dir; REGISTER on every call — a suite
     // sharing the JVM may call RollupNavigation.clear() (spec hygiene),

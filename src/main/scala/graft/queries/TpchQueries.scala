@@ -411,7 +411,7 @@ object TpchQueries {
       import graft.ops.Graph
       val li = Tables.lineitem(s, dir)
         .select((col("l_suppkey") * 2).as("src"), (col("l_partkey") * 2 + 1).as("dst"))
-      // Cost attribution (tools/PrDiag): r16 re-measured prep at 1.2 s of
+      // Cost attribution (OPTIMIZATION_r16.md "PageRank"): r16 re-measured prep at 1.2 s of
       // the ~5.6 s steady query — the rounds, not prep, carry the rest
       // (the r14 "prep dominates" reading didn't survive re-measurement
       // on a quiet box). Two "obvious" prep rewrites measured WORSE and

@@ -9,8 +9,8 @@ import graft.sources.Tables
   * delta folded into ladders of growing span. The claim is O(delta +
   * touched partitions) — refresh time must stay flat while the store
   * span (and so the hourly rung's row/partition count) grows. Spans are
-  * built by time-shifting the sf fixture (5 months per copy, like
-  * NavDiag); the delta is the final month re-shifted past the end so it
+  * built by time-shifting the sf fixture (5 months per copy, like the
+  * SCALE.md "Round-12: grain-ladder navigation" rows); the delta is the final month re-shifted past the end so it
   * always touches ~31 fresh day-partitions.
   */
 object LadderStress {
@@ -42,7 +42,7 @@ object LadderStress {
         Rollup.refreshStatsLadder(spark, delta, L)
         (System.nanoTime() - t1) / 1e9
       }
-      val nH = spark.read.parquet(L.hourlyPath).count()
+      val nH = Tables.parquet(spark, L.hourlyPath).count()
       println(f"DIAG span=${span * 5}%d-months hourlyRows=$nH%d " +
         f"build=$tBuild%.1fs refreshFixedDelta=${times.min}%.1fs")
     }

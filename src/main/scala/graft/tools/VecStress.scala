@@ -42,7 +42,7 @@ object VecStress {
         col("label"))
       .repartition(32)
       .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
-    val n = spark.read.parquet(s"$out/embeddings.parquet").count()
+    val n = Tables.embeddings(spark, out).count()
     println(s"VECSTRESS fixture: $n vectors at $out")
 
     def clean(): Unit = {

@@ -165,16 +165,17 @@ class SinksSpec extends SparkSpec {
     // was already moved into the undo dir, a DAMAGED half-written bucket
     // sits in its place (empty dir — the exact state the old dynamic
     // overwrite could leave, which also used to crash the direct read),
-    // and the manifest records the bucket existed.
+    // and the StoreCommit manifest records the bucket's directory name
+    // and that it existed.
     val live = new Path(sp, "bucket=1")
-    val undo = new Path(sp, ".graft_undo/999")
+    val undo = new Path(sp, ".graft_undo/crashed")
     fs.mkdirs(undo)
     assert(fs.rename(live, new Path(undo, "bucket=1")))
     fs.mkdirs(live) // damaged: exists but holds zero data files
     val out = fs.create(new Path(undo, "MANIFEST"), true)
-    out.write("1 1\n".getBytes("UTF-8")); out.close()
+    out.write("bucket=1 1\n".getBytes("UTF-8")); out.close()
     // also a stray staged dir from the crashed batch
-    fs.mkdirs(new Path(sp, ".graft_stage/999/bucket=1"))
+    fs.mkdirs(new Path(sp, ".graft_stage/crashed/bucket=1"))
 
     // replayed/next batch: recovery must restore the saved bucket before
     // merging, so k=1 upgrades from the ORIGINAL ver=10 state and k=5
@@ -196,17 +197,51 @@ class SinksSpec extends SparkSpec {
     val fs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // bucket=2 did NOT exist before the crashed batch (manifest says 0)
     // but its staged data already renamed in → recovery must delete it
-    // to restore the pre-batch state
+    // to restore the pre-batch state. UpsertSink commits through
+    // StoreCommit, whose manifest names the bucket's directory.
     fs.mkdirs(new Path(sp, "bucket=2"))
     val f = fs.create(new Path(sp, "bucket=2/part-0.parquet"), true)
     f.write(Array[Byte](1, 2, 3)); f.close()
     val undo = new Path(sp, ".graft_undo/7")
     fs.mkdirs(undo)
     val out = fs.create(new Path(undo, "MANIFEST"), true)
-    out.write("2 0\n".getBytes("UTF-8")); out.close()
-    graft.streaming.UpsertSink.recover(fs, sp)
+    out.write("bucket=2 0\n".getBytes("UTF-8")); out.close()
+    graft.ops.StoreCommit.recover(fs, sp)
     assert(!fs.exists(new Path(sp, "bucket=2")))
     assert(!fs.exists(new Path(sp, ".graft_undo")))
+  }
+
+  test("StoreCommit recover: restores saved partitions, removes half-committed new ones, by dir name") {
+    import org.apache.hadoop.fs.Path
+    val root = java.nio.file.Files.createTempDirectory("graft_commit_rec_").toString
+    val sp = new Path(s"$root/state")
+    val fs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def put(p: Path, bytes: Byte*): Unit = {
+      val f = fs.create(p, true); f.write(bytes.toArray); f.close()
+    }
+    def bytesOf(p: Path): Seq[Byte] = {
+      val in = fs.open(p)
+      try in.readAllBytes().toSeq finally in.close()
+    }
+    // the null partition did NOT exist before the crashed commit (flag 0)
+    // but its staged data already renamed in: recovery must delete it.
+    // The escaped partition existed (flag 1) and was swapped: the saved
+    // copy goes back in place of the half-committed one. Names are the
+    // directory names exactly as Spark writes them.
+    val nullDir = "d=__HIVE_DEFAULT_PARTITION__"
+    val escDir = "d=a%2Fb c"
+    put(new Path(sp, s"$nullDir/part-0.parquet"), 1, 2, 3)
+    put(new Path(sp, s"$escDir/part-new.parquet"), 9)
+    val undo = new Path(sp, ".graft_undo/7")
+    put(new Path(undo, s"$escDir/part-old.parquet"), 4, 5)
+    put(new Path(undo, "MANIFEST"), s"$escDir 1\n$nullDir 0\n".getBytes("UTF-8").toIndexedSeq: _*)
+    fs.mkdirs(new Path(sp, ".graft_stage/7"))
+    graft.ops.StoreCommit.recover(fs, sp)
+    assert(!fs.exists(new Path(sp, nullDir)))
+    assert(fs.listStatus(new Path(sp, escDir)).map(_.getPath.getName).toSeq === Seq("part-old.parquet"))
+    assert(bytesOf(new Path(sp, s"$escDir/part-old.parquet")) === Seq[Byte](4, 5))
+    assert(!fs.exists(new Path(sp, ".graft_undo")))
+    assert(!fs.exists(new Path(sp, ".graft_stage")))
   }
 
   test("q_p8 plan prunes day partitions via PartitionFilters, no data filter") {
